@@ -233,12 +233,10 @@ object Bench {
     // a different, noisier invocation than its headline — undetectable
     // without this field).
     val runId = java.lang.Long.toHexString(System.currentTimeMillis())
-    // 3-decimal values + short sf label keep the whole line ~2 KB: the
-    // harness captures only a bounded tail of stdout, and an oversize line
-    // is recorded as unparseable (BENCH_r01/r02 "parsed": null).
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
-      .mkString("{", ",", "}")
+    // 3-decimal values + short sf label keep the per-query map ~8 KB
+    def jmap(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
+    val qs = jmap(results)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Mechanical drift normalization (VERDICT r16 #5): the r16 run's
     // probe floor is the recorded reference; a run on a host measuring
@@ -272,16 +270,13 @@ object Bench {
     // record, a one-off GC stall is indistinguishable from a plan regression
     // (r07's q139/q186 read 1.9x slower on byte-identical code). The spread
     // between passes IS the noise floor a reader needs to judge a delta.
-    def jmap(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
     val failedJson = {
       import scala.jdk.CollectionConverters._
       failedQueries.asScala.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     }
     val fullLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfLabel","run_id":"$runId","calibration_start_s":$calStart%.3f,"calibration_end_s":$calEnd%.3f,"calibration_ref_s":$ReferenceProbeS%.3f,"s_per_query_calibrated":$sPerQueryCalibrated%.3f,"log_errors":${logErrors.get},"log_errors_warmup":${logErrorsWarmup.get},"failed":${failedQueries.size},"failed_queries":$failedJson,"pass1":${jmap(p1)},"pass2":${jmap(p2)},"pass3":${jmap(p3)}}"""
-    // The full per-query map goes to the FILE only: at 210 queries the map is
-    // ~5 KB and the harness's bounded stdout tail truncated it from the FRONT
-    // in r06 ("parsed": null). The file copy survives any amount of log noise.
+    // The per-pass maps go to the FILE only; the file copy survives any
+    // amount of log noise.
     try java.nio.file.Files.write(java.nio.file.Paths.get("target/bench.json"),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () }
@@ -295,10 +290,11 @@ object Bench {
         (s"run_id $runId\n" + kinds + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
-    // stdout gets a COMPACT summary (~120 bytes) as the LAST line — total,
-    // query count, sf, and a pointer to the per-query file — so the driver's
-    // tail capture always holds the complete JSON object.
-    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{},"n":${results.size},"sf":"$sfLabel","run_id":"$runId","calibration_start_s":$calStart%.3f,"calibration_end_s":$calEnd%.3f,"calibration_ref_s":$ReferenceProbeS%.3f,"s_per_query_calibrated":$sPerQueryCalibrated%.3f,"log_errors":${logErrors.get},"log_errors_warmup":${logErrorsWarmup.get},"failed":${failedQueries.size},"per_query":"target/bench.json"}"""
+    // stdout gets the summary as the LAST line — total, the min-of-N
+    // per-query map, query count, sf, and a pointer to the per-pass file.
+    // Shutdown is silenced above, so nothing prints after it to evict the
+    // line's head from a bounded tail capture.
+    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"n":${results.size},"sf":"$sfLabel","run_id":"$runId","calibration_start_s":$calStart%.3f,"calibration_end_s":$calEnd%.3f,"calibration_ref_s":$ReferenceProbeS%.3f,"s_per_query_calibrated":$sPerQueryCalibrated%.3f,"log_errors":${logErrors.get},"log_errors_warmup":${logErrorsWarmup.get},"failed":${failedQueries.size},"per_query":"target/bench.json"}"""
     println(compact)
     System.out.flush()
   }

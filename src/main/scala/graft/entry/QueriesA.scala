@@ -1376,8 +1376,9 @@ private[graft] object QueriesA {
     // the property that makes this feasible on a web graph where a raw
     // neighbor self-join explodes at hub nodes). Edges are a
     // deterministic 1013-node graph derived from orders; counts exact
-    // longs, so the oracle replays the identical orientation
-    "q126_x_triangle_count" -> gridTuned((s, d) => {
+    // longs, so the oracle replays the identical orientation. Row-scale:
+    // one row per node, and the node set grows with the corpus
+    "q126_x_triangle_count" -> rowTuned((s, d) => {
       val edges = Tables.orders(s, d).select(
         (col("o_orderkey") % 1013).cast("string").as("src"),
         ((col("o_orderkey") * 7 + col("o_custkey")) % 1013).cast("string").as("dst"))

@@ -45,9 +45,9 @@ object Graph {
     * `scale ÷ N`.
     *
     * Two regimes, the [[graft.text.Dedup.connectedComponents]] split:
-    * a distinct edge set at or under `driverMaxEdges` (dial:
-    * `GRAFT_PR_DRIVER_MAX`; 0 forces distributed) collects once and
-    * iterates IN the driver — integer sums are order-independent, so
+    * a distinct edge set at or under `driverMaxEdges` (0 forces
+    * distributed) collects once and iterates IN the driver — integer
+    * sums are order-independent, so
     * the kernel is bit-identical to the distributed loop (parity-
     * specced) at none of its per-round broadcast/stage floors. Beyond
     * the threshold the distributed loop below runs unchanged; the
@@ -62,8 +62,6 @@ object Graph {
                driverMaxEdges: Long = 2000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val lvl = StorageLevel.MEMORY_AND_DISK
-    val threshold = sys.env.get("GRAFT_PR_DRIVER_MAX").map(_.toLong)
-      .getOrElse(driverMaxEdges)
     // Cheap admission probe for the driver regime: RAW row count upper-
     // bounds the distinct edge count, and on a scan+project frame
     // Catalyst serves count() from parquet footers (no data read). When
@@ -99,7 +97,7 @@ object Graph {
     val rawUpper =
       if (footerCountable(edges.queryExecution.analyzed)) edges.count()
       else Long.MaxValue
-    if (rawUpper <= threshold) {
+    if (rawUpper <= driverMaxEdges) {
       val raw = edges.select(col(srcCol).cast("string").as("src"),
           col(dstCol).cast("string").as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -118,7 +116,7 @@ object Graph {
       // not once per derivation
       .persist(lvl)
     val nEdges = e.count()
-    if (nEdges <= threshold) {
+    if (nEdges <= driverMaxEdges) {
       val out = pageRankDriver(edges.sparkSession,
         e.collect().map(r => (r.getString(0), r.getString(1))),
         iterations, scale)

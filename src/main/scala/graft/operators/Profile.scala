@@ -465,9 +465,10 @@ object Profile {
     * |r_yz| = 1) emit null partial/verdict.
     *
     * `longSums = true` is the measured FAST PATH (12.8× at the 10×
-    * corpus — DialProbe, round 10: 10.28 s DECIMAL vs 0.80 s LONG; the
-    * nine 16-byte decimal sum buffers, not the arithmetic, were the
-    * round-9 sweep's 6.95× outlier): the sums accumulate as plain
+    * corpus, round 10: 10.28 s DECIMAL vs 0.80 s LONG, SURVEY.md
+    * "Appendix: retired probe mains", DialProbe; the nine 16-byte
+    * decimal sum buffers, not the arithmetic, were the round-9
+    * sweep's 6.95× outlier): the sums accumulate as plain
     * BIGINT, and a SOUND fail-loud fence guards exactness —
     * `n · max|v|² < 2⁶³·0.9` per key (n·max|a|·max|b| upper-bounds
     * every |Σab|, so under the fence no sum can have wrapped; the max

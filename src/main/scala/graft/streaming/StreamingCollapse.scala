@@ -17,20 +17,20 @@ import org.apache.spark.sql.types._
 object StreamingCollapse {
 
   /** Start `writer`, drain it to completion, stop — with
-    * `spark.sql.shuffle.partitions` temporarily lowered for the query's
-    * lifetime (GRAFT_STREAM_PARTITIONS, default 4). A stateful query
-    * creates one state store PER shuffle partition PER stateful operator
-    * at START; these bounded verify/bench drains hold a few thousand
-    * keys, so a 32-partition session buys nothing but state-store setup
-    * and maintenance cost (a stream-stream join at 32 partitions opens
-    * 128 stores for a 33-row result). Standing production streams size
+    * `spark.sql.shuffle.partitions` temporarily lowered to 4 for the
+    * query's lifetime. A stateful query creates one state store PER
+    * shuffle partition PER stateful operator at START; these bounded
+    * verify/bench drains hold a few thousand keys, so a 32-partition
+    * session buys nothing but state-store setup and maintenance cost (a
+    * stream-stream join at 32 partitions opens 128 stores for a 33-row
+    * result). Standing production streams size
     * their partitions to throughput at their own start and never pass
     * through here. Partition count only shapes the state layout — the
     * drained result is partition-count-independent. */
   private def drain(spark: SparkSession, writer: DataStreamWriter[_]): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4"))
+    spark.conf.set(key, "4")
     try {
       val q = writer.start()
       try {
@@ -57,10 +57,24 @@ object StreamingCollapse {
     } finally spark.conf.set(key, prev)
   }
 
-  /** Drain an APPEND-mode streaming query through a FILE sink and read
-    * the landed files back (round 17). The memory sink holds EVERY
-    * output row on the driver — fine for complete-mode twins, whose
-    * drained state is grid-sized by contract, but append-mode twins
+  /** The skeleton every memory-sink twin shares: tune the session, stop
+    * any query still active under `name` (a run that died mid-drain), drain
+    * `query` to the memory sink in `mode` (`complete` for the grid-state
+    * twins, `update` for the per-key fold twins) and return the drained
+    * table. `query` is by-name so it is built after `tune`, under the
+    * session's tuned conf. */
+  private def memoryTwin(spark: SparkSession, name: String,
+                         mode: String = "complete")(query: => Dataset[_]): DataFrame = {
+    graft.GraftSession.tune(spark)
+    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
+    drain(spark, query.writeStream.outputMode(mode).format("memory").queryName(name))
+    spark.table(name)
+  }
+
+  /** The [[memoryTwin]] skeleton for the APPEND-mode twins, which drain
+    * through a FILE sink and read it back (round 17). The memory sink
+    * holds EVERY output row on the driver — fine for complete-mode
+    * twins, whose drained state is grid-sized by contract, but append-mode twins
     * emit ROW-SCALE output (sessions, joined pairs, transitions,
     * deltas), and the whole-engine 100× sweep measured the wall:
     * q187's drain died at `spark.driver.maxResultSize` (1.2 GiB of
@@ -74,10 +88,11 @@ object StreamingCollapse {
     * drain that emitted zero rows leaves no part files, where schema
     * inference would throw — and skipping inference also skips a
     * footer read per drain. */
-  private def drainFiles(spark: SparkSession, writer: DataStreamWriter[_],
-                         name: String,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private def fileTwin(spark: SparkSession, name: String)(query: => Dataset[_]): DataFrame = {
     import java.nio.file.{Files, Paths}
+    graft.GraftSession.tune(spark)
+    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
+    val stream = query
     val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_sink_$name")
     def rmrf(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
       val it = Files.walk(p).sorted(java.util.Comparator.reverseOrder()).iterator()
@@ -86,11 +101,11 @@ object StreamingCollapse {
     rmrf(base)
     Files.createDirectories(base)
     val out = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-    drain(spark, writer.format("parquet")
+    drain(spark, stream.writeStream.outputMode("append").queryName(name)
+      .format("parquet")
       .option("path", out)
-      .option("checkpointLocation", ckpt))
-    spark.read.schema(schema).parquet(out)
+      .option("checkpointLocation", base.resolve("ckpt").toString))
+    spark.read.schema(stream.schema).parquet(out)
   }
 
   /** Physical parquet schema per (dir, table), read from the footer ONCE
@@ -124,17 +139,7 @@ object StreamingCollapse {
     * `ts div 1000` µs derivation then works unchanged on either encoding. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val phys = physSchema(spark, dir, "events")
-    // Bounded ingestion rate — the production dial for stateful queries
-    // over a large landing backlog: draining a month of time-ordered files
-    // in ONE micro-batch means the watermark never advances mid-batch, so
-    // stream-stream joins hold the ENTIRE history per key and a Zipf-hot
-    // key pays O(n_k²) probe work (measured in the round-7 skew sweep,
-    // SURVEY §8). With per-batch file caps over time-ordered landing
-    // files, eviction keeps per-key state at the watermark horizon.
-    val reader = spark.readStream.schema(phys)
-    sys.env.get("GRAFT_STREAM_MAX_FILES")
-      .foreach(n => reader.option("maxFilesPerTrigger", n))
-    val raw = reader.parquet(streamDir(dir))
+    val raw = spark.readStream.schema(phys).parquet(streamDir(dir))
     if (phys("ts").dataType == LongType) raw
     else raw.withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000"))
   }
@@ -228,17 +233,14 @@ object StreamingCollapse {
     * gaps-and-islands SQL: only CLOSED sessions are emitted, so each
     * user's final island stays in state and out of the output). */
   def eventSessions(spark: SparkSession, dir: String, gapMinutes: Int): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_sessions"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    import spark.implicits._
-    val events = eventsStream(spark, dir)
-      .select(col("user_id"), expr("ts div 1000").as("tsMicros"), col("value"))
-      .as[(Long, Long, Double)]
-      .map { case (u, t, v) => SessionEvent(u, t, v) }
-    val sessions = sessionize(events, gapMinutes, withTimeout = false)
-    val landed = drainFiles(spark, sessions
-      .writeStream.outputMode("append").queryName(name), name, sessions.schema)
+    val landed = fileTwin(spark, "graft_stream_sessions") {
+      import spark.implicits._
+      val events = eventsStream(spark, dir)
+        .select(col("user_id"), expr("ts div 1000").as("tsMicros"), col("value"))
+        .as[(Long, Long, Double)]
+        .map { case (u, t, v) => SessionEvent(u, t, v) }
+      sessionize(events, gapMinutes, withTimeout = false)
+    }
     landed
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), round(col("sum_value"), 2).as("sum_value"))
@@ -249,21 +251,16 @@ object StreamingCollapse {
     * completion over the batch test file via the memory sink. Returns the
     * finished aggregate as a DataFrame — deterministic, oracle-checkable. */
   def weeklyEventStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_weekly"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val agg = eventsStream(spark, dir)
-      .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ets", "30 days")
-      .groupBy(window(col("ets"), "7 days"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(to_date(col("window.start")).as("week"),
-        col("event_type"), col("n"), col("sum_value"))
-    drain(spark, agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
-    spark.table(name).orderBy("week", "event_type")
+    val agg = memoryTwin(spark, "graft_stream_weekly") {
+      eventsStream(spark, dir)
+        .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ets", "30 days")
+        .groupBy(window(col("ets"), "7 days"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .select(to_date(col("window.start")).as("week"),
+          col("event_type"), col("n"), col("sum_value"))
+    }
+    agg.orderBy("week", "event_type")
   }
 
   /** SLIDING-window per-event-type stats — the overlapping-window
@@ -279,22 +276,17 @@ object StreamingCollapse {
     * Emits the integral-cents sum, not a float sum: complete-mode
     * re-emission must be bit-stable across micro-batch slicings. */
   def slidingEventStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_sliding"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val agg = eventsStream(spark, dir)
-      .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
-      .withColumn("cents", expr("cast(floor(value * 100 + 0.5) as bigint)"))
-      .withWatermark("ets", "60 days")
-      .groupBy(window(col("ets"), "28 days", "7 days"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-      .select(to_date(col("window.start")).as("window_start"),
-        col("event_type"), col("n"), col("sum_cents"))
-    drain(spark, agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
-    spark.table(name).orderBy("window_start", "event_type")
+    val agg = memoryTwin(spark, "graft_stream_sliding") {
+      eventsStream(spark, dir)
+        .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
+        .withColumn("cents", expr("cast(floor(value * 100 + 0.5) as bigint)"))
+        .withWatermark("ets", "60 days")
+        .groupBy(window(col("ets"), "28 days", "7 days"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
+        .select(to_date(col("window.start")).as("window_start"),
+          col("event_type"), col("n"), col("sum_cents"))
+    }
+    agg.orderBy("window_start", "event_type")
   }
 
   /** Streaming count-min heavy hitters: maintain ONE CMS
@@ -314,19 +306,14 @@ object StreamingCollapse {
   def streamingCmsHeavyHitters(spark: SparkSession, dir: String,
                                probes: Seq[String],
                                width: Int = 1024): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_cms"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val sketch = eventsStream(spark, dir)
-      .select(concat(col("event_type"), lit(":"), col("user_id") % 40).as("k"))
-      .agg(graft.operators.Sketch.cmsAggCol(col("k"), width).as("cms"))
-    drain(spark, sketch.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val sketch = memoryTwin(spark, "graft_stream_cms") {
+      eventsStream(spark, dir)
+        .select(concat(col("event_type"), lit(":"), col("user_id") % 40).as("k"))
+        .agg(graft.operators.Sketch.cmsAggCol(col("k"), width).as("cms"))
+    }
     import spark.implicits._
     graft.operators.Sketch.cmsEstimatesFromSketch(
-        spark.table(name), "cms", probes.toDF("k"), "k", width)
+        sketch, "cms", probes.toDF("k"), "k", width)
       .orderBy("k")
   }
 
@@ -346,17 +333,12 @@ object StreamingCollapse {
     * KMV state is k longs per key forever. */
   def streamingKmvDistinct(spark: SparkSession, dir: String,
                            k: Int = 128): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_kmv"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val sketch = eventsStream(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(graft.operators.Sketch.kmvAggCol(col("user_id"), k).as("__s"))
-    drain(spark, sketch.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
-    spark.table(name)
+    val sketch = memoryTwin(spark, "graft_stream_kmv") {
+      eventsStream(spark, dir)
+        .groupBy(col("event_type"))
+        .agg(graft.operators.Sketch.kmvAggCol(col("user_id"), k).as("__s"))
+    }
+    sketch
       .select(col("event_type"), col("__s.n_est").as("n_est"),
         col("__s.kth_hash").as("kth_hash"), col("__s.n_kept").as("n_kept"))
       .orderBy("event_type")
@@ -377,20 +359,15 @@ object StreamingCollapse {
     * aggregate; analytics = batch over the standing snapshot) — the
     * production shape for "live retention curve" dashboards. */
   def streamingKaplanMeier(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_km"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val per = eventsStream(spark, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(min(expr("ts div 1000")).as("first_us"),
-        max(expr("ts div 1000")).as("last_us"))
-    drain(spark, per.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val per = memoryTwin(spark, "graft_stream_km") {
+      eventsStream(spark, dir)
+        .filter(col("ts").isNotNull && col("user_id").isNotNull)
+        .groupBy(col("user_id"))
+        .agg(min(expr("ts div 1000")).as("first_us"),
+          max(expr("ts div 1000")).as("last_us"))
+    }
     graft.operators.Survival.kaplanMeier(
-        graft.operators.Survival.lifetimeSubjects(spark.table(name)),
+        graft.operators.Survival.lifetimeSubjects(per),
         Seq("cohort"), "dur_days", "churned")
       .orderBy("key", "duration")
   }
@@ -416,27 +393,22 @@ object StreamingCollapse {
     * dashboard without re-scanning history). */
   def streamingLiftTable(spark: SparkSession, dir: String,
                          nTiles: Int = 10): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_lift"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val hist = spark.readStream
-      .schema(documentsSchema)
-      .parquet(streamDir(dir, "documents"))
-      .withColumn("score_e6", pmod(col("doc_id") * 48271L, lit(1000001L)))
-      .withColumn("label",
-        pmod(col("doc_id") * 2654435761L, lit(1000000L)) < col("score_e6"))
-      // the SAME null exclusion batch liftTable applies — a null doc_id
-      // would otherwise seed a null score group and shift every
-      // cumulative column off the shared oracle
-      .filter(col("score_e6").isNotNull && col("label").isNotNull)
-      .groupBy(col("score_e6").as("__v"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col("label"), 1L).otherwise(0L)).as("__p"))
-    drain(spark, hist.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
-    graft.operators.Metrics.liftFromCounts(spark.table(name), nTiles)
+    val hist = memoryTwin(spark, "graft_stream_lift") {
+      spark.readStream
+        .schema(documentsSchema)
+        .parquet(streamDir(dir, "documents"))
+        .withColumn("score_e6", pmod(col("doc_id") * 48271L, lit(1000001L)))
+        .withColumn("label",
+          pmod(col("doc_id") * 2654435761L, lit(1000000L)) < col("score_e6"))
+        // the SAME null exclusion batch liftTable applies — a null doc_id
+        // would otherwise seed a null score group and shift every
+        // cumulative column off the shared oracle
+        .filter(col("score_e6").isNotNull && col("label").isNotNull)
+        .groupBy(col("score_e6").as("__v"))
+        .agg(count(lit(1)).as("__c"),
+          sum(when(col("label"), 1L).otherwise(0L)).as("__p"))
+    }
+    graft.operators.Metrics.liftFromCounts(hist, nTiles)
       .orderBy("tile")
   }
 
@@ -455,28 +427,23 @@ object StreamingCollapse {
     * shared oracle — the live "has the embedding distribution moved"
     * dashboard beside the KS/PSI/profile drift twins. */
   def streamingCentroidDrift(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_cdrift"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val comps = spark.readStream
-      .schema(embeddingsSchema)
-      .parquet(streamDir(dir, "embeddings"))
-      .filter(col("embedding").isNotNull)
-      .withColumn("__side", pmod(col("vec_id"), lit(2L)).cast("int"))
-      .select(col("label"), col("__side"),
-        posexplode(col("embedding")).as(Seq("__i", "__v")))
-      .groupBy(col("label"), col("__side"), col("__i"))
-      .agg(sum(floor(col("__v") * 1e6 + 0.5).cast("long")).as("__s"),
-        count(lit(1)).as("__c"))
-    drain(spark, comps.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val comps = memoryTwin(spark, "graft_stream_cdrift") {
+      spark.readStream
+        .schema(embeddingsSchema)
+        .parquet(streamDir(dir, "embeddings"))
+        .filter(col("embedding").isNotNull)
+        .withColumn("__side", pmod(col("vec_id"), lit(2L)).cast("int"))
+        .select(col("label"), col("__side"),
+          posexplode(col("embedding")).as(Seq("__i", "__v")))
+        .groupBy(col("label"), col("__side"), col("__i"))
+        .agg(sum(floor(col("__v") * 1e6 + 0.5).cast("long")).as("__s"),
+          count(lit(1)).as("__c"))
+    }
     // no checkpoint needed: the readout is a single conditional-pivot
     // pass over the drained grid (driftFromComponentSums), so the
     // memory-sink lineage is consumed exactly once — the self-join that
     // used to trip conflicting-reference resolution is gone
-    graft.sim.VectorOps.driftFromComponentSums(spark.table(name), Seq("label"))
+    graft.sim.VectorOps.driftFromComponentSums(comps, Seq("label"))
       .orderBy("label")
   }
 
@@ -491,22 +458,17 @@ object StreamingCollapse {
     * checkpoints eagerly because the readout re-aggregates the grid four
     * ways (the memory-sink conflicting-reference footgun). */
   def streamingNmi(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_nmi"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val cells = spark.readStream
-      .schema(documentsSchema)
-      .parquet(streamDir(dir, "documents"))
-      .filter(col("lang").isNotNull && col("source").isNotNull)
-      .withColumn("half", pmod(col("doc_id"), lit(2L)))
-      .groupBy(col("half"), col("lang").as("__a"), col("source").as("__b"))
-      .agg(count(lit(1)).as("__c"))
-    drain(spark, cells.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val cells = memoryTwin(spark, "graft_stream_nmi") {
+      spark.readStream
+        .schema(documentsSchema)
+        .parquet(streamDir(dir, "documents"))
+        .filter(col("lang").isNotNull && col("source").isNotNull)
+        .withColumn("half", pmod(col("doc_id"), lit(2L)))
+        .groupBy(col("half"), col("lang").as("__a"), col("source").as("__b"))
+        .agg(count(lit(1)).as("__c"))
+    }
     graft.operators.Metrics.nmiFromCells(
-        spark.table(name).localCheckpoint(true), Seq("half"))
+        cells.localCheckpoint(true), Seq("half"))
       .orderBy("half")
   }
 
@@ -521,28 +483,23 @@ object StreamingCollapse {
     * has the best cut moved". Eager checkpoint: the readout layers
     * windows + a rank over the memory-sink lineage. */
   def streamingBestSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_stump"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val grid = spark.readStream
-      .schema(documentsSchema)
-      .parquet(streamDir(dir, "documents"))
-      .filter(col("text").isNotNull && col("source").isNotNull &&
-        col("lang").isNotNull)
-      .withColumn("is_en", col("lang") === "en")
-      .select(col("source"), col("is_en"),
-        expr("stack(2, 'chars_c', n_chars div 100, 'toks_d', " +
-          "size(split(trim(text), '\\\\s+')) div 10) as (feat, __v)"))
-      .filter(col("__v").isNotNull)
-      .groupBy(col("source"), col("feat"), col("__v"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col("is_en"), 1L).otherwise(0L)).as("__p"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_stump") {
+      spark.readStream
+        .schema(documentsSchema)
+        .parquet(streamDir(dir, "documents"))
+        .filter(col("text").isNotNull && col("source").isNotNull &&
+          col("lang").isNotNull)
+        .withColumn("is_en", col("lang") === "en")
+        .select(col("source"), col("is_en"),
+          expr("stack(2, 'chars_c', n_chars div 100, 'toks_d', " +
+            "size(split(trim(text), '\\\\s+')) div 10) as (feat, __v)"))
+        .filter(col("__v").isNotNull)
+        .groupBy(col("source"), col("feat"), col("__v"))
+        .agg(count(lit(1)).as("__c"),
+          sum(when(col("is_en"), 1L).otherwise(0L)).as("__p"))
+    }
     graft.operators.Regression.bestSplitFromGrid(
-        spark.table(name).localCheckpoint(true), Seq("source"), "feat")
+        grid.localCheckpoint(true), Seq("source"), "feat")
       .orderBy("source", "feat")
   }
 
@@ -558,25 +515,20 @@ object StreamingCollapse {
     * checkpoint: the readout layers two windows over the memory-sink
     * lineage. */
   def streamingCvm(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_cvm"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val grid = eventsStream(spark, dir)
-      .filter(col("value").isNotNull && col("event_type").isNotNull)
-      .withColumn("__v", floor(col("value") * 100 + 0.5).cast("long"))
-      // identical A/B derivation to the batch q281 (null user_id -> B,
-      // the CASE/otherwise convention both engines share)
-      .withColumn("__side",
-        when(pmod(col("user_id"), lit(2L)) === 0, "A").otherwise("B"))
-      .groupBy(col("event_type"), col("__v"))
-      .agg(sum(when(col("__side") === "A", 1L).otherwise(0L)).as("__ca"),
-        sum(when(col("__side") === "B", 1L).otherwise(0L)).as("__cb"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_cvm") {
+      eventsStream(spark, dir)
+        .filter(col("value").isNotNull && col("event_type").isNotNull)
+        .withColumn("__v", floor(col("value") * 100 + 0.5).cast("long"))
+        // identical A/B derivation to the batch q281 (null user_id -> B,
+        // the CASE/otherwise convention both engines share)
+        .withColumn("__side",
+          when(pmod(col("user_id"), lit(2L)) === 0, "A").otherwise("B"))
+        .groupBy(col("event_type"), col("__v"))
+        .agg(sum(when(col("__side") === "A", 1L).otherwise(0L)).as("__ca"),
+          sum(when(col("__side") === "B", 1L).otherwise(0L)).as("__cb"))
+    }
     graft.operators.Metrics.cvmFromGrid(
-        spark.table(name).localCheckpoint(true), Seq("event_type"))
+        grid.localCheckpoint(true), Seq("event_type"))
       .orderBy("event_type")
   }
 
@@ -589,25 +541,20 @@ object StreamingCollapse {
     * off the baseline". Eager checkpoint: the readout crosses the grid
     * with its own totals. */
   def streamingVocabJsd(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_vjsd"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val grid = spark.readStream
-      .schema(documentsSchema)
-      .parquet(streamDir(dir, "documents"))
-      .filter(col("text").isNotNull && length(trim(col("text"))) > 0)
-      .withColumn("__side", when(col("lang") === "en", 0).otherwise(1))
-      .select(col("__side"),
-        explode(graft.functions.Cols.tokens(col("text"))).as("__t"))
-      .groupBy(col("__t"))
-      .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col("__side") === 1, 1L).otherwise(0L)).as("__cb"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_vjsd") {
+      spark.readStream
+        .schema(documentsSchema)
+        .parquet(streamDir(dir, "documents"))
+        .filter(col("text").isNotNull && length(trim(col("text"))) > 0)
+        .withColumn("__side", when(col("lang") === "en", 0).otherwise(1))
+        .select(col("__side"),
+          explode(graft.functions.Cols.tokens(col("text"))).as("__t"))
+        .groupBy(col("__t"))
+        .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("__ca"),
+          sum(when(col("__side") === 1, 1L).otherwise(0L)).as("__cb"))
+    }
     graft.text.TextAnalysis.jsdFromTokenGrid(
-      spark.table(name).localCheckpoint(true))
+      grid.localCheckpoint(true))
   }
 
   /** Streaming exact dedup over a landing directory of document files:
@@ -621,20 +568,15 @@ object StreamingCollapse {
     * memory sink for a compacted key-value sink and the same plan runs
     * incrementally. */
   def streamingExactDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_dedup"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val agg = spark.readStream
-      .schema(documentsSchema)
-      .parquet(streamDir(dir, "documents"))
-      .select(col("doc_id"), graft.text.Dedup.exactDigest(col("text")).as("text_hash"))
-      .groupBy("text_hash")
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-    drain(spark, agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
-    spark.table(name).orderBy("text_hash")
+    val agg = memoryTwin(spark, "graft_stream_dedup") {
+      spark.readStream
+        .schema(documentsSchema)
+        .parquet(streamDir(dir, "documents"))
+        .select(col("doc_id"), graft.text.Dedup.exactDigest(col("text")).as("text_hash"))
+        .groupBy("text_hash")
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+    }
+    agg.orderBy("text_hash")
   }
 
   // ------------------------------------------------------ stream-stream join
@@ -650,23 +592,19 @@ object StreamingCollapse {
     * time-bounded self-join SQL. */
   def clickPurchaseJoin(spark: SparkSession, dir: String,
                         windowMinutes: Int): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_join"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    def side(evType: String, pfx: String) = eventsStream(spark, dir)
-      .filter(col("event_type") === evType)
-      .select(col("user_id").as(s"${pfx}_user"),
-        expr("timestamp_micros(ts div 1000)").as(s"${pfx}_ts"),
-        col("event_id").as(s"${pfx}_id"),
-        col("value").as(s"${pfx}_value"))
-      .withWatermark(s"${pfx}_ts", "1 hour")
-    val joined = side("click", "click").join(side("purchase", "purchase"),
-      col("click_user") === col("purchase_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr(s"interval $windowMinutes minutes"))
-    val landed = drainFiles(spark, joined.writeStream
-      .outputMode("append")
-      .queryName(name), name, joined.schema)
+    val landed = fileTwin(spark, "graft_stream_join") {
+      def side(evType: String, pfx: String) = eventsStream(spark, dir)
+        .filter(col("event_type") === evType)
+        .select(col("user_id").as(s"${pfx}_user"),
+          expr("timestamp_micros(ts div 1000)").as(s"${pfx}_ts"),
+          col("event_id").as(s"${pfx}_id"),
+          col("value").as(s"${pfx}_value"))
+        .withWatermark(s"${pfx}_ts", "1 hour")
+      side("click", "click").join(side("purchase", "purchase"),
+        col("click_user") === col("purchase_user") &&
+          col("purchase_ts") >= col("click_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr(s"interval $windowMinutes minutes"))
+    }
     landed
       .select(col("click_user").as("user_id"), col("click_id"), col("purchase_id"),
         round(col("purchase_value"), 2).as("purchase_value"))
@@ -690,22 +628,17 @@ object StreamingCollapse {
     * drop the hint: Spark re-plans the static side per micro-batch and
     * falls back to a shuffled join. */
   def enrichedEventStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_enrich"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val userAvg = graft.sources.Tables.events(spark, dir)
-      .groupBy("user_id").agg(avg(col("value")).as("user_avg"))
-    val agg = eventsStream(spark, dir)
-      .select(col("user_id"), col("event_type"), col("value"))
-      .join(broadcast(userAvg), Seq("user_id"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        round(sum(abs(col("value") - col("user_avg"))), 2).as("sum_absdev"))
-    drain(spark, agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
-    spark.table(name).orderBy("event_type")
+    val agg = memoryTwin(spark, "graft_stream_enrich") {
+      val userAvg = graft.sources.Tables.events(spark, dir)
+        .groupBy("user_id").agg(avg(col("value")).as("user_avg"))
+      eventsStream(spark, dir)
+        .select(col("user_id"), col("event_type"), col("value"))
+        .join(broadcast(userAvg), Seq("user_id"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          round(sum(abs(col("value") - col("user_avg"))), 2).as("sum_absdev"))
+    }
+    agg.orderBy("event_type")
   }
 
   final case class BucketDoc(bkey: String, docId: Long, sig: Seq[Long])
@@ -802,12 +735,9 @@ object StreamingCollapse {
   def streamingNearDupPairs(spark: SparkSession, dir: String,
                             k: Int = 8, bands: Int = 4,
                             shingleK: Int = 3): DataFrame = {
-    val name = "graft_stream_neardup"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val pairs = nearDupPairsStream(spark, dir, k, bands, shingleK, stateTtlMinutes = None)
-    val landed = drainFiles(spark, pairs.writeStream
-      .outputMode("append")
-      .queryName(name), name, pairs.schema)
+    val landed = fileTwin(spark, "graft_stream_neardup") {
+      nearDupPairsStream(spark, dir, k, bands, shingleK, stateTtlMinutes = None)
+    }
     landed.dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"), round(col("est_jaccard"), 4).as("est_jaccard"))
       .orderBy("id_a", "id_b")
@@ -828,18 +758,13 @@ object StreamingCollapse {
   def streamingExpectations(spark: SparkSession, dir: String,
                             checks: Seq[(String, String)]): DataFrame = {
     require(checks.nonEmpty, "streamingExpectations needs at least one check")
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_expect"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val aggs = checks.map { case (n, pred) =>
-      sum(when(expr(pred), 0L).otherwise(1L)).as(s"__v_$n")
-    } :+ count(lit(1)).as("__n")
-    val agg = eventsStream(spark, dir).agg(aggs.head, aggs.tail: _*)
-    drain(spark, agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
-    spark.table(name)
+    val agg = memoryTwin(spark, "graft_stream_expect") {
+      val aggs = checks.map { case (n, pred) =>
+        sum(when(expr(pred), 0L).otherwise(1L)).as(s"__v_$n")
+      } :+ count(lit(1)).as("__n")
+      eventsStream(spark, dir).agg(aggs.head, aggs.tail: _*)
+    }
+    agg
       .select(explode(array(checks.map { case (n, _) =>
         struct(lit(n).as("constraint"), col("__n").as("n_rows"),
           col(s"__v_$n").as("n_violations"))
@@ -867,32 +792,29 @@ object StreamingCollapse {
     * the emitted multiset equals the batch lead-window pairs exactly —
     * the aggregate readout shares q171's oracle. */
   def streamingTransitions(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_trans"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    import spark.implicits._
-    val events = eventsStream(spark, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("user_id"), expr("ts div 1000").as("tsu"),
-        col("event_id"), col("event_type"))
-      .as[(Long, Long, Long, String)]
-      .map { case (u, t, id, s) => TransEvent(u, t, id, s) }
-    val pairs = events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, it: Iterator[TransEvent], state: GroupState[TransState]) => {
-          val sorted = it.toSeq.sortBy(e => (e.tsu, e.eventId))
-          var last = state.getOption
-          val out = Seq.newBuilder[Transition]
-          sorted.foreach { e =>
-            last.foreach(l => out += Transition(l.state, e.state))
-            last = Some(TransState(e.tsu, e.eventId, e.state))
-          }
-          last.foreach(state.update)
-          out.result().iterator
-        })
-    val landed = drainFiles(spark, pairs.writeStream
-      .outputMode("append").queryName(name), name, pairs.schema)
+    val landed = fileTwin(spark, "graft_stream_trans") {
+      import spark.implicits._
+      val events = eventsStream(spark, dir)
+        .filter(col("ts").isNotNull && col("event_type").isNotNull)
+        .select(col("user_id"), expr("ts div 1000").as("tsu"),
+          col("event_id"), col("event_type"))
+        .as[(Long, Long, Long, String)]
+        .map { case (u, t, id, s) => TransEvent(u, t, id, s) }
+      events
+        .groupByKey(_.userId)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+          (_: Long, it: Iterator[TransEvent], state: GroupState[TransState]) => {
+            val sorted = it.toSeq.sortBy(e => (e.tsu, e.eventId))
+            var last = state.getOption
+            val out = Seq.newBuilder[Transition]
+            sorted.foreach { e =>
+              last.foreach(l => out += Transition(l.state, e.state))
+              last = Some(TransState(e.tsu, e.eventId, e.state))
+            }
+            last.foreach(state.update)
+            out.result().iterator
+          })
+    }
     // totals via a window over the matrix-sized counts (a join back onto
     // the same sink lineage used to trip conflicting-reference resolution
     // on the memory-sink view; the file-read relation is clean either way)
@@ -932,44 +854,41 @@ object StreamingCollapse {
     * oracle). */
   def streamingSprt(spark: SparkSession, dir: String, p0: Double, p1: Double,
                     alphaPermille: Int, betaPermille: Int): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_sprt"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
     val (l1, l0, hiT, loT) = graft.operators.Metrics.sprtConstantsE12(
       p0, p1, alphaPermille, betaPermille)
-    import spark.implicits._
-    val events = eventsStream(spark, dir)
-      .filter(col("event_type").isNotNull && col("value").isNotNull &&
-        col("ts").isNotNull)
-      .select(col("event_type"), col("ts"), col("event_id"),
-        (col("value") >= 50.0).as("hit"))
-      .as[(String, Long, Long, Boolean)]
-      .map { case (k, t, id, h) => SprtEvent(k, t, id, h) }
-    val states = events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (key: String, it: Iterator[SprtEvent], state: GroupState[SprtState]) => {
-          var st = state.getOption.getOrElse(SprtState(0L, 0L, 0, -1L))
-          it.toSeq.sortBy(e => (e.tsn, e.eventId)).foreach { e =>
-            val a = st.a + (if (e.hit) 1L else 0L)
-            val n = st.n + 1L
-            if (st.dec == 0) {
-              // exact integer LLR: BigInt headroom (a·|l1| can pass 2^63
-              // only beyond ~9e6 trials per key; BigInt never wraps)
-              val llr = BigInt(a) * l1 + BigInt(n - a) * l0
-              val d = if (llr >= hiT) 1 else if (llr <= loT) -1 else 0
-              st = SprtState(a, n, d, if (d != 0) n else -1L)
-            } else st = st.copy(a = a, n = n)
-          }
-          state.update(st)
-          Iterator.single(SprtRow(key, st.n, st.a, st.dec, st.nDec))
-        })
-    drain(spark, states.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name))
+    val states = memoryTwin(spark, "graft_stream_sprt", "update") {
+      import spark.implicits._
+      val events = eventsStream(spark, dir)
+        .filter(col("event_type").isNotNull && col("value").isNotNull &&
+          col("ts").isNotNull)
+        .select(col("event_type"), col("ts"), col("event_id"),
+          (col("value") >= 50.0).as("hit"))
+        .as[(String, Long, Long, Boolean)]
+        .map { case (k, t, id, h) => SprtEvent(k, t, id, h) }
+      events
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
+          (key: String, it: Iterator[SprtEvent], state: GroupState[SprtState]) => {
+            var st = state.getOption.getOrElse(SprtState(0L, 0L, 0, -1L))
+            it.toSeq.sortBy(e => (e.tsn, e.eventId)).foreach { e =>
+              val a = st.a + (if (e.hit) 1L else 0L)
+              val n = st.n + 1L
+              if (st.dec == 0) {
+                // exact integer LLR: BigInt headroom (a·|l1| can pass 2^63
+                // only beyond ~9e6 trials per key; BigInt never wraps)
+                val llr = BigInt(a) * l1 + BigInt(n - a) * l0
+                val d = if (llr >= hiT) 1 else if (llr <= loT) -1 else 0
+                st = SprtState(a, n, d, if (d != 0) n else -1L)
+              } else st = st.copy(a = a, n = n)
+            }
+            state.update(st)
+            Iterator.single(SprtRow(key, st.n, st.a, st.dec, st.nDec))
+          })
+    }
     // latest state per key (update mode re-emits; max n wins)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("n_total").desc)
-    spark.table(name)
+    states
       .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
       .filter(col("__rn") === 1)
       .withColumn("decision", expr(
@@ -998,9 +917,10 @@ object StreamingCollapse {
     * stage-0 event can lower t₀ and retroactively qualify an already-seen
     * stage-1 event this operator no longer holds). Per-batch sorting
     * handles intra-batch disorder; across batches the time-ordered
-    * landing convention (the `GRAFT_STREAM_MAX_FILES` discipline,
-    * SURVEY §8 skew sweep) is assumed — the same contract every
-    * watermark-evicted operator already rides on. */
+    * landing convention (bounded `maxFilesPerTrigger` ingestion over
+    * time-ordered files, SURVEY.md "Hot-key probe one decade further")
+    * is assumed — the same contract every watermark-evicted operator
+    * already rides on. */
   def streamingFunnel(spark: SparkSession, dir: String,
                       stages: Seq[String]): DataFrame = {
     val advances = funnelAdvances(spark, dir, stages)
@@ -1039,37 +959,34 @@ object StreamingCollapse {
   private def funnelAdvances(spark: SparkSession, dir: String,
                              stages: Seq[String]): DataFrame = {
     require(stages.nonEmpty, "streamingFunnel needs at least one stage")
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_funnel"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    import spark.implicits._
-    val stageIdx = stages.zipWithIndex.toMap
-    val events = eventsStream(spark, dir)
-      .filter(col("ts").isNotNull && col("event_type").isin(stages: _*))
-      .select(col("user_id"), expr("ts div 1000").as("tsu"),
-        col("event_id"), col("event_type"))
-      .as[(Long, Long, Long, String)]
-      .map { case (u, t, id, s) => FunnelEvent(u, t, id, stageIdx(s)) }
-    val advances = events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, it: Iterator[FunnelEvent], state: GroupState[List[Long]]) => {
-          // chain times NEWEST-FIRST (List prepend); length = completed
-          var chain = state.getOption.getOrElse(Nil)
-          val out = Seq.newBuilder[FunnelAdv]
-          it.toSeq.sortBy(e => (e.tsu, e.eventId)).foreach { e =>
-            val need = chain.length
-            if (need < stages.length && e.stage == need &&
-                (chain.isEmpty || e.tsu > chain.head)) {
-              out += FunnelAdv(user, need)
-              chain ::= e.tsu
+    fileTwin(spark, "graft_stream_funnel") {
+      import spark.implicits._
+      val stageIdx = stages.zipWithIndex.toMap
+      val events = eventsStream(spark, dir)
+        .filter(col("ts").isNotNull && col("event_type").isin(stages: _*))
+        .select(col("user_id"), expr("ts div 1000").as("tsu"),
+          col("event_id"), col("event_type"))
+        .as[(Long, Long, Long, String)]
+        .map { case (u, t, id, s) => FunnelEvent(u, t, id, stageIdx(s)) }
+      events
+        .groupByKey(_.userId)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+          (user: Long, it: Iterator[FunnelEvent], state: GroupState[List[Long]]) => {
+            // chain times NEWEST-FIRST (List prepend); length = completed
+            var chain = state.getOption.getOrElse(Nil)
+            val out = Seq.newBuilder[FunnelAdv]
+            it.toSeq.sortBy(e => (e.tsu, e.eventId)).foreach { e =>
+              val need = chain.length
+              if (need < stages.length && e.stage == need &&
+                  (chain.isEmpty || e.tsu > chain.head)) {
+                out += FunnelAdv(user, need)
+                chain ::= e.tsu
+              }
             }
-          }
-          state.update(chain)
-          out.result().iterator
-        })
-    drainFiles(spark, advances.writeStream
-      .outputMode("append").queryName(name), name, advances.schema)
+            state.update(chain)
+            out.result().iterator
+          })
+    }
   }
 
   // ------------------------------------------- streaming join delta
@@ -1104,50 +1021,47 @@ object StreamingCollapse {
                          rightType: String = "purchase",
                          maxIdsPerKey: Int = 100000): DataFrame = {
     require(maxIdsPerKey >= 1, s"maxIdsPerKey must be >= 1, got $maxIdsPerKey")
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_joindelta"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    import spark.implicits._
-    val tagged = eventsStream(spark, dir)
-      .filter(col("event_type").isin(leftType, rightType) &&
-        col("user_id").isNotNull && col("event_id").isNotNull)
-      .select(col("user_id"),
-        when(col("event_type") === leftType, 0).otherwise(1).as("side"),
-        col("event_id"))
-      .as[(Long, Int, Long)]
-      .map { case (k, s, id) => SideRow(k, s, id) }
-    val pairs = tagged
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: Long, it: Iterator[SideRow],
-         state: GroupState[(List[Long], List[Long])]) => {
-          var (ls, rs) = state.getOption.getOrElse(
-            (List.empty[Long], List.empty[Long]))
-          // carry sizes incrementally: List.size is O(n) and the cap check
-          // must not add a per-batch full-list walk
-          var n = ls.size + rs.size
-          val out = Seq.newBuilder[DeltaPair]
-          it.foreach { e =>
-            if (e.side == 0) {
-              rs.foreach(r => out += DeltaPair(key, e.id, r))
-              ls ::= e.id
-            } else {
-              ls.foreach(l => out += DeltaPair(key, l, e.id))
-              rs ::= e.id
+    val pairs = fileTwin(spark, "graft_stream_joindelta") {
+      import spark.implicits._
+      val tagged = eventsStream(spark, dir)
+        .filter(col("event_type").isin(leftType, rightType) &&
+          col("user_id").isNotNull && col("event_id").isNotNull)
+        .select(col("user_id"),
+          when(col("event_type") === leftType, 0).otherwise(1).as("side"),
+          col("event_id"))
+        .as[(Long, Int, Long)]
+        .map { case (k, s, id) => SideRow(k, s, id) }
+      tagged
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+          (key: Long, it: Iterator[SideRow],
+           state: GroupState[(List[Long], List[Long])]) => {
+            var (ls, rs) = state.getOption.getOrElse(
+              (List.empty[Long], List.empty[Long]))
+            // carry sizes incrementally: List.size is O(n) and the cap check
+            // must not add a per-batch full-list walk
+            var n = ls.size + rs.size
+            val out = Seq.newBuilder[DeltaPair]
+            it.foreach { e =>
+              if (e.side == 0) {
+                rs.foreach(r => out += DeltaPair(key, e.id, r))
+                ls ::= e.id
+              } else {
+                ls.foreach(l => out += DeltaPair(key, l, e.id))
+                rs ::= e.id
+              }
+              n += 1
+              if (n > maxIdsPerKey) throw new IllegalStateException(
+                s"streamingJoinDelta: key $key exceeded maxIdsPerKey=$maxIdsPerKey " +
+                  "stored rows — this operator maintains UNBOUNDED join history and " +
+                  "is contracted to key-cardinality-bounded sides; for event " +
+                  "firehoses use the watermarked clickPurchaseJoin instead")
             }
-            n += 1
-            if (n > maxIdsPerKey) throw new IllegalStateException(
-              s"streamingJoinDelta: key $key exceeded maxIdsPerKey=$maxIdsPerKey " +
-                "stored rows — this operator maintains UNBOUNDED join history and " +
-                "is contracted to key-cardinality-bounded sides; for event " +
-                "firehoses use the watermarked clickPurchaseJoin instead")
-          }
-          state.update((ls, rs))
-          out.result().iterator
-        })
-    drainFiles(spark, pairs.writeStream
-      .outputMode("append").queryName(name), name, pairs.schema)
-      .orderBy("user_id", "left_id", "right_id")
+            state.update((ls, rs))
+            out.result().iterator
+          })
+    }
+    pairs.orderBy("user_id", "left_id", "right_id")
   }
 
   // ------------------------------------------- streaming drift monitor
@@ -1163,24 +1077,21 @@ object StreamingCollapse {
     * drift monitor oracle-checkable. */
   def streamingPsiDrift(spark: SparkSession, dir: String,
                         binWidth: Long = 50L, nBins: Int = 10): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_psi"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val counts = eventsStream(spark, dir)
-      .filter(col("event_type").isNotNull && col("value").isNotNull)
-      .select(col("event_type").as("__g"),
-        greatest(lit(0L),
-          least(expr(s"cast(floor(value) as bigint) div $binWidth"),
-            lit(nBins - 1L))).as("__bin"))
-      .groupBy(col("__g"), col("__bin"))
-      .agg(count(lit(1)).as("__c"))
-    drain(spark, counts.writeStream
-      .outputMode("complete").format("memory").queryName(name))
+    val counts = memoryTwin(spark, "graft_stream_psi") {
+      eventsStream(spark, dir)
+        .filter(col("event_type").isNotNull && col("value").isNotNull)
+        .select(col("event_type").as("__g"),
+          greatest(lit(0L),
+            least(expr(s"cast(floor(value) as bigint) div $binWidth"),
+              lit(nBins - 1L))).as("__bin"))
+        .groupBy(col("__g"), col("__bin"))
+        .agg(count(lit(1)).as("__c"))
+    }
     // psiFromCounts self-joins its input; on the memory-sink view every
     // branch carries the SAME attribute ids and resolution fails
     // (the streamingTransitions join hazard). The grid is O(groups·bins)
     // rows, so an eager localCheckpoint is a cheap lineage break.
-    val grid = spark.table(name).localCheckpoint(true)
+    val grid = counts.localCheckpoint(true)
     graft.operators.Metrics.psiFromCounts(grid, nBins, "event_type")
       .orderBy("event_type")
   }
@@ -1197,19 +1108,16 @@ object StreamingCollapse {
     * tombstones keep their state slot (a later re-insert must win by
     * version) and drop at READOUT, matching the batch contract. */
   def streamingCdcSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_cdc"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val agg = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-      .select(col("o_custkey").as("k"), col("o_orderkey").as("v"),
-        when(col("o_orderkey") % 10 === 0, lit("D")).otherwise(lit("U")).as("op"),
-        col("o_totalprice").as("price"))
-      .groupBy(col("k"))
-      .agg(max_by(struct(col("v"), col("op"), col("price")), col("v")).as("last"))
-    drain(spark, agg.writeStream
-      .outputMode("complete").format("memory").queryName(name))
-    spark.table(name)
+    val agg = memoryTwin(spark, "graft_stream_cdc") {
+      val phys = physSchema(spark, dir, "orders")
+      spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+        .select(col("o_custkey").as("k"), col("o_orderkey").as("v"),
+          when(col("o_orderkey") % 10 === 0, lit("D")).otherwise(lit("U")).as("op"),
+          col("o_totalprice").as("price"))
+        .groupBy(col("k"))
+        .agg(max_by(struct(col("v"), col("op"), col("price")), col("v")).as("last"))
+    }
+    agg
       .filter(col("last.op") =!= "D")
       .select(col("k"), col("last.v").as("v"), col("last.price").as("price"))
       .orderBy("k")
@@ -1235,21 +1143,18 @@ object StreamingCollapse {
     * micros-exact tie on the gap itself. */
   def streamingSessionWindows(spark: SparkSession, dir: String,
                               gapMinutes: Int = 720): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_sesswin"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
     val gapUs = gapMinutes * 60L * 1000000L
-    val agg = eventsStream(spark, dir)
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .withColumn("tsu", expr("timestamp_micros(ts div 1000)"))
-      .groupBy(col("user_id"),
-        session_window(col("tsu"), s"$gapMinutes minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"))
-    drain(spark, agg.writeStream
-      .outputMode("complete").format("memory").queryName(name))
+    val agg = memoryTwin(spark, "graft_stream_sesswin") {
+      eventsStream(spark, dir)
+        .filter(col("user_id").isNotNull && col("ts").isNotNull)
+        .withColumn("tsu", expr("timestamp_micros(ts div 1000)"))
+        .groupBy(col("user_id"),
+          session_window(col("tsu"), s"$gapMinutes minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"))
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("start_us"))
-    spark.table(name).localCheckpoint(true)
+    agg.localCheckpoint(true)
       .select(col("user_id"), col("n_events"),
         expr("unix_micros(sw.start)").as("start_us"),
         expr(s"unix_micros(sw.end) - $gapUs").as("end_us"))
@@ -1272,26 +1177,21 @@ object StreamingCollapse {
     * vocab rank + broadcast join over the memory-sink lineage. */
   def streamingVocabCoverage(spark: SparkSession, dir: String,
                              topN: Int = 500): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_vocabcov"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val grid = spark.readStream
-      .schema(documentsSchema)
-      .parquet(streamDir(dir, "documents"))
-      .filter(col("source").isNotNull && col("text").isNotNull)
-      .withColumn("__ref", col("lang") === "en")
-      .select(col("source"), col("__ref"),
-        explode(graft.functions.Cols.tokens(col("text"))).as("__tok"))
-      .filter(col("__tok") =!= "")
-      .groupBy(col("source"), col("__tok"))
-      .agg(count(lit(1)).as("__n"),
-        sum(when(col("__ref"), 1L).otherwise(0L)).as("__nref"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_vocabcov") {
+      spark.readStream
+        .schema(documentsSchema)
+        .parquet(streamDir(dir, "documents"))
+        .filter(col("source").isNotNull && col("text").isNotNull)
+        .withColumn("__ref", col("lang") === "en")
+        .select(col("source"), col("__ref"),
+          explode(graft.functions.Cols.tokens(col("text"))).as("__tok"))
+        .filter(col("__tok") =!= "")
+        .groupBy(col("source"), col("__tok"))
+        .agg(count(lit(1)).as("__n"),
+          sum(when(col("__ref"), 1L).otherwise(0L)).as("__nref"))
+    }
     graft.text.Corpus.coverageFromGrid(
-        spark.table(name).localCheckpoint(true), Seq("source"), topN)
+        grid.localCheckpoint(true), Seq("source"), topN)
       .orderBy("source")
   }
 
@@ -1307,25 +1207,20 @@ object StreamingCollapse {
     * set join over the memory-sink lineage. */
   def streamingTopkStability(spark: SparkSession, dir: String,
                              k: Int = 10): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_topk"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val grid = eventsStream(spark, dir)
-      .filter(col("event_type").isNotNull && col("user_id").isNotNull &&
-        col("value").isNotNull)
-      // identical half-month split to the batch q319
-      .withColumn("__s",
-        when(dayofmonth(expr("timestamp_micros(ts div 1000)")) < 16, "A")
-          .otherwise("B"))
-      .withColumn("__cents", floor(col("value") * 100 + 0.5).cast("long"))
-      .groupBy(col("event_type"), col("__s"), col("user_id").as("__it"))
-      .agg(sum(col("__cents")).as("__v"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_topk") {
+      eventsStream(spark, dir)
+        .filter(col("event_type").isNotNull && col("user_id").isNotNull &&
+          col("value").isNotNull)
+        // identical half-month split to the batch q319
+        .withColumn("__s",
+          when(dayofmonth(expr("timestamp_micros(ts div 1000)")) < 16, "A")
+            .otherwise("B"))
+        .withColumn("__cents", floor(col("value") * 100 + 0.5).cast("long"))
+        .groupBy(col("event_type"), col("__s"), col("user_id").as("__it"))
+        .agg(sum(col("__cents")).as("__v"))
+    }
     graft.operators.Metrics.stabilityFromTotals(
-        spark.table(name).localCheckpoint(true), Seq("event_type"), k)
+        grid.localCheckpoint(true), Seq("event_type"), k)
       .orderBy("event_type")
   }
 
@@ -1348,47 +1243,44 @@ object StreamingCollapse {
   def streamingPageHinkley(spark: SparkSession, dir: String,
                            delta: Double = 0.0,
                            lambda: Double = 50000.0): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_ph"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val lambdaE9 = math.floor(lambda * 1e9 + 0.5).toLong
-    import spark.implicits._
-    val events = eventsStream(spark, dir)
-      .filter(col("event_type").isNotNull && col("value").isNotNull &&
-        col("ts").isNotNull)
-      .select(col("event_type"), col("ts"), col("event_id"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .as[(String, Long, Long, Long)]
-      .map { case (k, t, id, x) => PhEvent(k, t, id, x) }
-    val states = events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (key: String, it: Iterator[PhEvent], state: GroupState[PhState]) => {
-          var st = state.getOption.getOrElse(
-            PhState(0L, 0L, 0L, Long.MaxValue, 0L, -1L))
-          it.toSeq.sortBy(e => (e.tsn, e.eventId)).foreach { e =>
-            val n = st.n + 1L
-            val p = st.p + e.x
-            // the batch __t9 tree, spelled identically
-            val t9 = math.floor((e.x.toDouble - p.toDouble / n.toDouble - delta)
-              * 1e9 + 0.5).toLong
-            val m = st.m + t9
-            val mm = math.min(st.mm, m)
-            val maxPh = math.max(st.maxPh, m - mm)
-            val alarmT =
-              if (st.alarmT >= 0) st.alarmT
-              else if (m - mm > lambdaE9) n
-              else -1L
-            st = PhState(n, p, m, mm, maxPh, alarmT)
-          }
-          state.update(st)
-          Iterator.single(PhRow(key, st.n, st.maxPh, st.alarmT))
-        })
-    drain(spark, states.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name))
+    val states = memoryTwin(spark, "graft_stream_ph", "update") {
+      val lambdaE9 = math.floor(lambda * 1e9 + 0.5).toLong
+      import spark.implicits._
+      val events = eventsStream(spark, dir)
+        .filter(col("event_type").isNotNull && col("value").isNotNull &&
+          col("ts").isNotNull)
+        .select(col("event_type"), col("ts"), col("event_id"),
+          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+        .as[(String, Long, Long, Long)]
+        .map { case (k, t, id, x) => PhEvent(k, t, id, x) }
+      events
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
+          (key: String, it: Iterator[PhEvent], state: GroupState[PhState]) => {
+            var st = state.getOption.getOrElse(
+              PhState(0L, 0L, 0L, Long.MaxValue, 0L, -1L))
+            it.toSeq.sortBy(e => (e.tsn, e.eventId)).foreach { e =>
+              val n = st.n + 1L
+              val p = st.p + e.x
+              // the batch __t9 tree, spelled identically
+              val t9 = math.floor((e.x.toDouble - p.toDouble / n.toDouble - delta)
+                * 1e9 + 0.5).toLong
+              val m = st.m + t9
+              val mm = math.min(st.mm, m)
+              val maxPh = math.max(st.maxPh, m - mm)
+              val alarmT =
+                if (st.alarmT >= 0) st.alarmT
+                else if (m - mm > lambdaE9) n
+                else -1L
+              st = PhState(n, p, m, mm, maxPh, alarmT)
+            }
+            state.update(st)
+            Iterator.single(PhRow(key, st.n, st.maxPh, st.alarmT))
+          })
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("n_obs").desc)
-    spark.table(name)
+    states
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .withColumn("first_alarm_t",
@@ -1411,25 +1303,20 @@ object StreamingCollapse {
     * monitors don't read. Eager checkpoint: the readout layers three
     * windows over the memory-sink lineage. */
   def streamingHistDrift(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_histdrift"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val grid = eventsStream(spark, dir)
-      .filter(col("value").isNotNull && col("event_type").isNotNull)
-      .withColumn("__v", floor(col("value") * 100 + 0.5).cast("long"))
-      // identical A/B derivation to the batch q301 (null user_id -> B,
-      // the q281 CASE/otherwise convention both engines share)
-      .withColumn("__side",
-        when(pmod(col("user_id"), lit(2L)) === 0, "A").otherwise("B"))
-      .groupBy(col("event_type"), col("__v"))
-      .agg(sum(when(col("__side") === "A", 1L).otherwise(0L)).as("__ca"),
-        sum(when(col("__side") === "B", 1L).otherwise(0L)).as("__cb"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_histdrift") {
+      eventsStream(spark, dir)
+        .filter(col("value").isNotNull && col("event_type").isNotNull)
+        .withColumn("__v", floor(col("value") * 100 + 0.5).cast("long"))
+        // identical A/B derivation to the batch q301 (null user_id -> B,
+        // the q281 CASE/otherwise convention both engines share)
+        .withColumn("__side",
+          when(pmod(col("user_id"), lit(2L)) === 0, "A").otherwise("B"))
+        .groupBy(col("event_type"), col("__v"))
+        .agg(sum(when(col("__side") === "A", 1L).otherwise(0L)).as("__ca"),
+          sum(when(col("__side") === "B", 1L).otherwise(0L)).as("__cb"))
+    }
     graft.operators.Metrics.histDriftFromGrid(
-        spark.table(name).localCheckpoint(true), Seq("event_type"))
+        grid.localCheckpoint(true), Seq("event_type"))
       .orderBy("event_type")
   }
 
@@ -1465,18 +1352,13 @@ object StreamingCollapse {
     .agg(count(lit(1)).as("__c"))
 
   def streamingChiSquare(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_chisq"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val grid = chiSquareGrid(spark.readStream
-      .schema(documentsSchema)
-      .parquet(streamDir(dir, "documents")))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_chisq") {
+      chiSquareGrid(spark.readStream
+        .schema(documentsSchema)
+        .parquet(streamDir(dir, "documents")))
+    }
     graft.operators.Metrics.chiSqFromCells(
-        spark.table(name).localCheckpoint(true), Seq("source"))
+        grid.localCheckpoint(true), Seq("source"))
       .orderBy("source")
   }
 
@@ -1493,25 +1375,20 @@ object StreamingCollapse {
     * overlap) moved under today's ingest" without a batch recompute.
     * State is covariate-cardinality-bounded — O(cells), not O(rows). */
   def streamingCemAtt(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_cem"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val cust = spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-      .withColumn("treat", col("o_custkey") % 3 === 0)
-      .withColumn("cents", floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-      .withColumn("month", graft.functions.Cols.monthStart(col("o_orderdate")))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-    val grid = graft.operators.Metrics.cemStrata(
-      o, "treat", "cents", Seq("o_orderpriority", "c_mktsegment", "month"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_cem") {
+      val phys = physSchema(spark, dir, "orders")
+      val cust = spark.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"), col("c_mktsegment"))
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+        .withColumn("treat", col("o_custkey") % 3 === 0)
+        .withColumn("cents", floor(col("o_totalprice") * 100 + 0.5).cast("long"))
+        .withColumn("month", graft.functions.Cols.monthStart(col("o_orderdate")))
+        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      graft.operators.Metrics.cemStrata(
+        o, "treat", "cents", Seq("o_orderpriority", "c_mktsegment", "month"))
+    }
     graft.operators.Metrics.attFromStrata(
-      spark.table(name).localCheckpoint(true))
+      grid.localCheckpoint(true))
   }
 
   /** Streaming twin of q352's difference-in-differences: the standing
@@ -1524,25 +1401,20 @@ object StreamingCollapse {
     * readout, so drained == batch bit-for-bit and q352's oracle serves
     * both. */
   def streamingDiffInDiff(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_did"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val cust = spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"),
-        (col("c_mktsegment") === "BUILDING").as("treated"))
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-      .withColumn("dollars", floor(col("o_totalprice") + lit(0.5)))
-      .withColumn("post", col("o_orderdate") >= lit("1995-07-01").cast("date"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-    val grid = graft.operators.Metrics.didMoments(
-      o, Seq("o_orderpriority"), "treated", "post", "dollars")
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_did") {
+      val phys = physSchema(spark, dir, "orders")
+      val cust = spark.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"),
+          (col("c_mktsegment") === "BUILDING").as("treated"))
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+        .withColumn("dollars", floor(col("o_totalprice") + lit(0.5)))
+        .withColumn("post", col("o_orderdate") >= lit("1995-07-01").cast("date"))
+        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      graft.operators.Metrics.didMoments(
+        o, Seq("o_orderpriority"), "treated", "post", "dollars")
+    }
     graft.operators.Metrics.didFromMoments(
-        spark.table(name).localCheckpoint(true))
+        grid.localCheckpoint(true))
       .orderBy("o_orderpriority")
   }
 
@@ -1556,9 +1428,9 @@ object StreamingCollapse {
     * batch and q353's oracle serves both. */
   def streamingConformal(spark: SparkSession, dir: String,
                          baseOpt: Option[DataFrame] = None): DataFrame = {
+    // the fit is batch work under the tuned session, frozen before the
+    // stream starts
     graft.GraftSession.tune(spark)
-    val name = "graft_stream_conf"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
     val groupCols = Seq("l_returnflag", "l_linestatus")
     def prep(df: DataFrame): DataFrame = graft.text.Corpus.hashSplit(
       df.withColumn("dollars", floor(col("l_extendedprice") + lit(0.5)))
@@ -1578,21 +1450,19 @@ object StreamingCollapse {
     // the standing query joins static literals, not a live batch plan
     val modelF = model.localCheckpoint(true)
     val qhatF = qhat.localCheckpoint(true)
-    val phys = physSchema(spark, dir, "lineitem")
-    val testStream = prep(
-        spark.readStream.schema(phys).parquet(streamDir(dir, "lineitem")))
-      .filter(col("split") === "test" && col("dollars").isNotNull &&
-        groupCols.map(col(_).isNotNull).reduce(_ && _))
-      .select(groupCols.map(col) :+
-        (col("dollars").cast("long") * 100L).as("__y2"): _*)
-    val counts = graft.operators.Metrics.conformalTestCounts(
-      testStream, modelF, qhatF, groupCols)
-    drain(spark, counts.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val counts = memoryTwin(spark, "graft_stream_conf") {
+      val phys = physSchema(spark, dir, "lineitem")
+      val testStream = prep(
+          spark.readStream.schema(phys).parquet(streamDir(dir, "lineitem")))
+        .filter(col("split") === "test" && col("dollars").isNotNull &&
+          groupCols.map(col(_).isNotNull).reduce(_ && _))
+        .select(groupCols.map(col) :+
+          (col("dollars").cast("long") * 100L).as("__y2"): _*)
+      graft.operators.Metrics.conformalTestCounts(
+        testStream, modelF, qhatF, groupCols)
+    }
     graft.operators.Metrics.conformalAssemble(
-      nTrain, qhatF, spark.table(name).localCheckpoint(true))
+      nTrain, qhatF, counts.localCheckpoint(true))
   }
 
   /** Streaming twin of q362's group-sequential boundaries — the natural
@@ -1603,21 +1473,16 @@ object StreamingCollapse {
     * `gsFromMoments`, so the standing "has any look crossed yet" monitor
     * equals the batch answer bit-for-bit and q362's oracle serves both. */
   def streamingGroupSequential(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_gst"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val ev = eventsStream(spark, dir)
-      .withColumn("look", expr(
-        "least(5, 1 + (dayofmonth(timestamp_micros(ts div 1000)) - 1) div 6)"))
-      .withColumn("arm", expr("user_id % 2 = 0"))
-      .withColumn("cents", expr("cast(floor(value * 100 + 0.5) as bigint)"))
-    val grid = graft.operators.Metrics.gsMoments(ev, "look", "arm", "cents", 5)
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_gst") {
+      val ev = eventsStream(spark, dir)
+        .withColumn("look", expr(
+          "least(5, 1 + (dayofmonth(timestamp_micros(ts div 1000)) - 1) div 6)"))
+        .withColumn("arm", expr("user_id % 2 = 0"))
+        .withColumn("cents", expr("cast(floor(value * 100 + 0.5) as bigint)"))
+      graft.operators.Metrics.gsMoments(ev, "look", "arm", "cents", 5)
+    }
     graft.operators.Metrics.gsFromMoments(
-        spark.table(name).localCheckpoint(true),
+        grid.localCheckpoint(true),
         graft.operators.Metrics.obfBoundariesE4(5))
       .orderBy("look")
   }
@@ -1628,18 +1493,13 @@ object StreamingCollapse {
     * and every drain re-derives the pairwise-difference order statistic
     * via the SHARED `qnFromGrid`; drained == batch, one oracle. */
   def streamingQnScale(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_qn"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "lineitem")
-    val li = spark.readStream.schema(phys).parquet(streamDir(dir, "lineitem"))
-    val grid = graft.operators.Sketch.qnGrid(li, Seq("l_returnflag"), "l_quantity")
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_qn") {
+      val phys = physSchema(spark, dir, "lineitem")
+      val li = spark.readStream.schema(phys).parquet(streamDir(dir, "lineitem"))
+      graft.operators.Sketch.qnGrid(li, Seq("l_returnflag"), "l_quantity")
+    }
     graft.operators.Sketch.qnFromGrid(
-      spark.table(name).localCheckpoint(true), Seq("l_returnflag"))
+      grid.localCheckpoint(true), Seq("l_returnflag"))
   }
 
   /** Streaming twin of q370's candidate-period seasonal scan — the
@@ -1653,22 +1513,17 @@ object StreamingCollapse {
     * drain (not ingest) is what makes out-of-order month arrivals safe:
     * the t index is a readout derivation, never stream state. */
   def streamingSeasonalGrid(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_seasonal"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-    val grid = o
-      .groupBy(col("o_orderpriority").as("prio"),
-        graft.functions.Cols.monthStart(col("o_orderdate")).as("month"))
-      .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
-        .as("cents"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_seasonal") {
+      val phys = physSchema(spark, dir, "orders")
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+      o
+        .groupBy(col("o_orderpriority").as("prio"),
+          graft.functions.Cols.monthStart(col("o_orderdate")).as("month"))
+        .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
+          .as("cents"))
+    }
     graft.stats.Diagnostics.seasonalPeriodGrid(
-        spark.table(name).localCheckpoint(true), Seq("prio"), "month", "cents")
+        grid.localCheckpoint(true), Seq("prio"), "month", "cents")
       .orderBy("prio", "p")
   }
 
@@ -1681,21 +1536,16 @@ object StreamingCollapse {
     * [[graft.operators.Metrics.cmhFromStrata]] readout, so drained ==
     * batch and q377's oracle serves both. */
   def streamingCmh(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_cmh"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-      .withColumn("expo", col("o_custkey") % 2 === 0)
-      .withColumn("hi", col("o_totalprice") >= 150000.0)
-    val grid = graft.operators.Metrics.cmhStrata(
-      o, "o_orderpriority", "expo", "hi")
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_cmh") {
+      val phys = physSchema(spark, dir, "orders")
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+        .withColumn("expo", col("o_custkey") % 2 === 0)
+        .withColumn("hi", col("o_totalprice") >= 150000.0)
+      graft.operators.Metrics.cmhStrata(
+        o, "o_orderpriority", "expo", "hi")
+    }
     graft.operators.Metrics.cmhFromStrata(
-      spark.table(name).localCheckpoint(true))
+      grid.localCheckpoint(true))
   }
 
   /** Streaming twin of q383's Jonckheere–Terpstra ordered trend — the
@@ -1708,21 +1558,16 @@ object StreamingCollapse {
     * bounded by key × group-vocabulary × the hundred-dollar value
     * grid, the same contract as the batch kernel. */
   def streamingJonckheere(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_jt"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-      .withColumn("hdollars",
-        expr("cast(floor(o_totalprice + 0.5) as bigint) div 100"))
-    val grid = graft.operators.Metrics.jtCells(
-      o, Seq("o_orderstatus"), "o_orderpriority", "hdollars")
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_jt") {
+      val phys = physSchema(spark, dir, "orders")
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+        .withColumn("hdollars",
+          expr("cast(floor(o_totalprice + 0.5) as bigint) div 100"))
+      graft.operators.Metrics.jtCells(
+        o, Seq("o_orderstatus"), "o_orderpriority", "hdollars")
+    }
     graft.operators.Metrics.jtFromCells(
-        spark.table(name).localCheckpoint(true), Seq("o_orderstatus"))
+        grid.localCheckpoint(true), Seq("o_orderstatus"))
       .orderBy("o_orderstatus")
   }
 
@@ -1733,21 +1578,16 @@ object StreamingCollapse {
     * midrank/BH readout re-derives at drain via the SHARED
     * `dunnFromCells`; drained == batch, q385's oracle serves both. */
   def streamingDunn(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_dunn"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-      .withColumn("hdollars",
-        expr("cast(floor(o_totalprice + 0.5) as bigint) div 100"))
-    val grid = graft.operators.Metrics.jtCells(
-      o, Seq("o_orderstatus"), "o_orderpriority", "hdollars")
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_dunn") {
+      val phys = physSchema(spark, dir, "orders")
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+        .withColumn("hdollars",
+          expr("cast(floor(o_totalprice + 0.5) as bigint) div 100"))
+      graft.operators.Metrics.jtCells(
+        o, Seq("o_orderstatus"), "o_orderpriority", "hdollars")
+    }
     graft.operators.Metrics.dunnFromCells(
-        spark.table(name).localCheckpoint(true), Seq("o_orderstatus"),
+        grid.localCheckpoint(true), Seq("o_orderstatus"),
         qPermille = 50)
       .orderBy("o_orderstatus", "group_a", "group_b")
   }
@@ -1759,23 +1599,18 @@ object StreamingCollapse {
     * the batch operator is the shared readout; drained == batch,
     * q387's oracle serves both. */
   def streamingPageTrend(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_page"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-    val grid = o
-      .groupBy(col("o_orderstatus"),
-        graft.functions.Cols.monthStart(col("o_orderdate")).as("month"),
-        col("o_orderpriority"))
-      .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
-        .as("cents"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_page") {
+      val phys = physSchema(spark, dir, "orders")
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+      o
+        .groupBy(col("o_orderstatus"),
+          graft.functions.Cols.monthStart(col("o_orderdate")).as("month"),
+          col("o_orderpriority"))
+        .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
+          .as("cents"))
+    }
     graft.operators.Metrics.pageTrend(
-        spark.table(name).localCheckpoint(true),
+        grid.localCheckpoint(true),
         Seq("o_orderstatus"), "month", "o_orderpriority", "cents")
       .orderBy("o_orderstatus")
   }
@@ -1785,23 +1620,18 @@ object StreamingCollapse {
     * `quadeTest`'s input rows, so the batch operator is the shared
     * readout; drained == batch, q389's oracle serves both. */
   def streamingQuade(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_quade"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "orders")
-    val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
-    val grid = o
-      .groupBy(col("o_orderstatus"),
-        graft.functions.Cols.monthStart(col("o_orderdate")).as("month"),
-        col("o_orderpriority"))
-      .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
-        .as("cents"))
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_quade") {
+      val phys = physSchema(spark, dir, "orders")
+      val o = spark.readStream.schema(phys).parquet(streamDir(dir, "orders"))
+      o
+        .groupBy(col("o_orderstatus"),
+          graft.functions.Cols.monthStart(col("o_orderdate")).as("month"),
+          col("o_orderpriority"))
+        .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
+          .as("cents"))
+    }
     graft.operators.Metrics.quadeTest(
-        spark.table(name).localCheckpoint(true),
+        grid.localCheckpoint(true),
         Seq("o_orderstatus"), "month", "o_orderpriority", "cents")
       .orderBy("o_orderstatus")
   }
@@ -1815,20 +1645,15 @@ object StreamingCollapse {
     * drained == batch via the SHARED `tClosenessFromCells` and q361's
     * oracle serves both. */
   def streamingTCloseness(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.tune(spark)
-    val name = "graft_stream_tclose"
-    spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val phys = physSchema(spark, dir, "customer")
-    val cust = spark.readStream.schema(phys).parquet(streamDir(dir, "customer"))
-      .withColumn("bal_band", expr("cast(floor(c_acctbal / 2000) as bigint)"))
-    val grid = graft.operators.Profile.tClosenessCells(
-      cust, Seq("c_nationkey", "c_mktsegment"), "bal_band")
-    drain(spark, grid.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name))
+    val grid = memoryTwin(spark, "graft_stream_tclose") {
+      val phys = physSchema(spark, dir, "customer")
+      val cust = spark.readStream.schema(phys).parquet(streamDir(dir, "customer"))
+        .withColumn("bal_band", expr("cast(floor(c_acctbal / 2000) as bigint)"))
+      graft.operators.Profile.tClosenessCells(
+        cust, Seq("c_nationkey", "c_mktsegment"), "bal_band")
+    }
     graft.operators.Profile.tClosenessFromCells(
-        spark.table(name).localCheckpoint(true),
+        grid.localCheckpoint(true),
         Seq("c_nationkey", "c_mktsegment"))
       .orderBy("c_nationkey", "c_mktsegment")
   }

@@ -671,19 +671,17 @@ object Dedup {
     *    round per action).
     *
     * Output: (id, component) for every node that appears in an edge;
-    * `component` = the minimum node id in the component. `GRAFT_CC_DRIVER_MAX`
-    * overrides the regime threshold (0 forces the distributed path). */
+    * `component` = the minimum node id in the component. `driverMaxEdges`
+    * is the regime threshold (0 forces the distributed path). */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 25,
                           driverMaxEdges: Long = 2000000L): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val threshold = sys.env.get("GRAFT_CC_DRIVER_MAX").map(_.toLong)
-      .getOrElse(driverMaxEdges)
     val eDistinct = e.distinct().persist(lvl)
     val nEdges = eDistinct.count()
-    if (nEdges <= threshold) {
+    if (nEdges <= driverMaxEdges) {
       val spark = edges.sparkSession
       val out = unionFind(eDistinct.collect().map(r => (r.getLong(0), r.getLong(1))))
       eDistinct.unpersist()

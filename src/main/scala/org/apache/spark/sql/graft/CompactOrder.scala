@@ -21,7 +21,7 @@ import org.apache.spark.sql.classic.Dataset
   * sort input — the optimization guide's §2.4 "orderBy used only to make
   * output deterministic" accidental shuffle. Measured on the bench
   * session shape (sf0.1, local[32]): −0.25–0.35 s and −2 jobs per
-  * mid-band grid query (OptProbe).
+  * mid-band grid query (OPTIMIZATION_r17.md).
   *
   * ONLY valid for queries whose output is CONTRACT-BOUNDED (key grids,
   * top-k, calendar months, fixed bins): the single sort task must hold
@@ -97,9 +97,9 @@ object CompactOrder {
     * [[releaseStaged]]), and a LOCAL checkpoint is not fault-tolerant —
     * losing an executor loses its blocks and fails the job instead of
     * recomputing from lineage. On a real cluster with churn, a reliable
-    * checkpoint (or recomputing the sampling pass) is the safer dial;
-    * per-member A/B evidence for the batch lives in
-    * `plans/r18/rowtuned_ab.md`. */
+    * checkpoint (or recomputing the sampling pass) is the safer dial.
+    * No per-member A/B of staging against the plain global sort is
+    * committed. */
   def staged(df: DataFrame): DataFrame =
     if (introspecting) df
     else df.queryExecution.logical match {

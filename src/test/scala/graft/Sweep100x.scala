@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * registered members (SparkEntry.queries) against BOTH sf0.1 and the
   * [[Synth100xFull]] corpus in one session, min-of-2 each, and prints
   * per-member multipliers — the 100 TB evidence for the non-dedup tier
-  * (the dedup/ANN family has its own dial-scaled sweep,
-  * [[DialSweep100]]).
+  * (the dedup/ANN family's dial-scaled sweep is recorded in SURVEY.md
+  * "Round 16", the two-decade dedup sweep).
   *
   * `sbt "Test/runMain graft.Sweep100x [100x-dir] [q1,q2,...]"`
   * (prefix-matched names; default dir /tmp/graft100xf). */

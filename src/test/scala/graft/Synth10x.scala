@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * `SPARK_GRAFT_SF_DIR=/tmp/graft10x_b`.
   *
   * Same methodology as the earlier sweeps: 10 id-offset copies of the
-  * sf0.1 tables (uniform keys; the Zipf variant lives in [[SkewSweep]]).
+  * sf0.1 tables (uniform keys; the Zipf variant's findings are in
+  * SURVEY.md "Skew-stress sweep (round 7)").
   * Offsets are per-table id columns only — categorical/metric columns
   * repeat, so grids (priorities, months, suppliers, bins) keep their
   * cardinality and per-grid-cell mass grows 10x, which is exactly the

@@ -671,4 +671,29 @@ class StreamingSpec extends SparkSpec {
     val batch = rows(graft.SparkEntry.queries("q225_x_kaplan_meier")(spark, dir))
     assert(streamed.nonEmpty && streamed == batch)
   }
+
+  test("twin helpers: a repeat call in one session gives the same rows, " +
+    "leaves no stream running and restores shuffle partitions") {
+    // the bench and Verify call every member many times in one session
+    val dir = "/root/testdata/sf0.001"
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    // a value the drain's own setting (4) cannot mask
+    spark.conf.set(key, "7")
+    try {
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "graft_stream_weekly" -> (() => weeklyEventStats(spark, dir)),
+        "graft_stream_sessions" -> (() => eventSessions(spark, dir, 30))
+      ).foreach { case (name, twin) =>
+        // collect each call before the next: a file twin's frame reads
+        // the landed files, which the next call re-stages
+        val first = twin().collect().toSeq
+        val second = twin().collect().toSeq
+        assert(first.nonEmpty && first == second, s"$name: repeat call changed rows")
+        assert(!spark.streams.active.exists(q => Option(q.name).contains(name)),
+          s"$name: a stream is still running")
+        assert(spark.conf.get(key) == "7", s"$name: shuffle partitions not restored")
+      }
+    } finally spark.conf.set(key, prev)
+  }
 }
